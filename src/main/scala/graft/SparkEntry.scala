@@ -145,9 +145,10 @@ object SparkEntry {
     // dense-LUT sum + argmax window) replays once per consumer. Lazy:
     // it materializes inside the first downstream action.
     // r21 §2.6 NEGATIVE RESULT (journal): widening this pinned join output
-    // (ops.Par.widen by doc_id) before the checkpoint was implemented and
-    // measured WORSE at sf0.1/local[32] (interleaved PairTimer:
-    // q_ccnet_buckets 4.60 → 6.19 s, q_ccnet_sample 4.39 → 6.85 s) even
+    // (an explicit repartition by doc_id, since reverted) before the
+    // checkpoint was implemented and measured WORSE at sf0.1/local[32]
+    // (interleaved PairTimer: q_ccnet_buckets 4.60 → 6.19 s,
+    // q_ccnet_sample 4.39 → 6.85 s) even
     // though the trigram explodes then ran 32-way instead of 1-way —
     // allocation-heavy string work contends catastrophically at 32-way on
     // this box (task-time sum 1.3 → 21.3 s). Reverted to the narrow

@@ -2,7 +2,6 @@ package graft.embed
 
 import java.security.MessageDigest
 import java.util.concurrent.{Executors, Semaphore, TimeUnit}
-import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 /** Pluggable embedding backend — the Spark-side contract of the reference's
@@ -89,33 +88,13 @@ final case class StubEmbeddingProvider(modelAlias: String = "titan-v1", seed: Lo
   */
 object EmbeddingStage {
   private val poolSize = math.min(Runtime.getRuntime.availableProcessors() * 2, 64)
-  // One pool + semaphore per executor JVM, shared across partitions/tasks.
-  // Kept as an ExecutorService (not just an ExecutionContext) so a
+  // One pool per executor JVM, shared across partitions/tasks (the
+  // `maxInFlight` semaphore is per partition). An ExecutorService so a
   // timed-out call can be cancel(true)-interrupted — see embedIteratorSafe.
   lazy val pool: java.util.concurrent.ExecutorService =
     Executors.newFixedThreadPool(poolSize, r => {
       val t = new Thread(r, "graft-embed"); t.setDaemon(true); t
     })
-  lazy val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-
-  def embedIterator(
-      texts: Iterator[String],
-      provider: EmbeddingProvider,
-      maxInFlight: Int = 1000,
-      batchSize: Int = 256,
-      timeout: Duration = 15000.millis): Iterator[EmbeddingResult] = {
-    val permits = new Semaphore(maxInFlight)
-    texts.grouped(batchSize).flatMap { batch =>
-      val futures = batch.map { t =>
-        permits.acquire()
-        Future {
-          try provider.embed(t)
-          finally permits.release()
-        }(ec)
-      }
-      futures.map(f => Await.result(f, timeout))
-    }
-  }
 
   /** One embed call under a [[RetryPolicy]]: retries transient failures with
     * exponential backoff, then converts a final failure into a Left(error)
@@ -166,8 +145,10 @@ object EmbeddingStage {
     perAttempt * policy.maxAttempts.toLong + backoffTotal.millis
   }
 
-  /** [[embedIterator]] with per-record retry + error capture. Same bounded
-    * concurrency; the output is an Either per input in order. The await
+  /** The embed loop: per-record retry + error capture under bounded
+    * concurrency; the output is an Either per input in order. Callers
+    * choose the failure policy on top of it — dead-letter the Lefts, or
+    * fail the task on the first one. The await
     * budget scales with the retry policy (attempts × per-attempt timeout +
     * backoff), and a blown budget becomes a Left — a stuck provider call
     * costs one dead-letter row, not the task.

@@ -2,8 +2,10 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model._
-import graft.embed.{EmbeddingProvider, EmbeddingStage, StubEmbeddingProvider}
+import graft.embed.{EmbeddingProvider, EmbeddingStage, RetryPolicy, StubEmbeddingProvider}
+import graft.sink.VectorSink
 
 /** The reference topology, rebuilt Spark-first (SURVEY §2a S1→O5):
   *
@@ -16,8 +18,9 @@ import graft.embed.{EmbeddingProvider, EmbeddingStage, StubEmbeddingProvider}
   *  - Malformed JSON goes to a dead-letter channel instead of crashing the
   *    job (reference Jackson parse throws,
   *    `operators/map/CustomMessageMapFunction.java:21-26`).
-  *  - Embedding failures would surface as task retries, not a null poison
-  *    pill NPE-ing the sink (reference
+  *  - An embedding failure is a dead-letter row (with a dead-letter dir)
+  *    or a task failure (without one), never a null poison pill NPE-ing
+  *    the sink (reference
   *    `…BedRockEmbeddingModelAsyncCustomMessage.java:109-117`).
   *  - `_id` is kept in the vector table; the reference drops it
   *    (`DataStreamJob.java:191` commented out) and relies on the store to
@@ -75,32 +78,25 @@ object RagPipeline {
         col("created_at"))
 
   /** O4 — embedding via bounded-concurrency mapPartitions (the Spark
-    * analogue of `AsyncDataStream.unorderedWait(…, 1000)`). Typed
-    * Dataset in/out so Tungsten handles the row format. */
+    * analogue of `AsyncDataStream.unorderedWait(…, 1000)`), under the
+    * no-dead-letter policy: [[embedSafe]]'s loop retries per
+    * [[graft.embed.RetryPolicy]], and the first record that still fails
+    * fails the task with that record's error — a document is never dropped
+    * silently. Typed Dataset in/out so Tungsten handles the row format. */
   def embed(df: DataFrame, provider: EmbeddingProvider,
-            maxInFlight: Int = 1000): Dataset[EmbeddedRecord] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("text"), col("created_at"), col("_id"))
-      .as[EnrichedMessage]
-      .mapPartitions { it =>
-        val (texts, metas) = it.duplicate
-        val results = EmbeddingStage.embedIterator(texts.map(_.text), provider, maxInFlight)
-        metas.zip(results).map { case (m, r) =>
-          EmbeddedRecord(m.text, m.created_at, m._id, r.embedding, r.inputTextTokenCount)
-        }
-      }
-  }
+            maxInFlight: Int = 1000): Dataset[EmbeddedRecord] =
+    embedOrFail(embedSafe(df, provider, RetryPolicy(), maxInFlight))
 
-  /** O4 with dead letters — [[embed]] plus bounded retry and per-record
-    * error capture. Output: [[graft.model.EmbeddedAttempt]] rows where
-    * exactly one of `embedding`/`embed_error` is non-null. Split with
+  /** O4 with dead letters — the one embed loop
+    * ([[graft.embed.EmbeddingStage.embedIteratorSafe]]): bounded retry and
+    * per-record error capture. Output: [[graft.model.EmbeddedAttempt]] rows
+    * where exactly one of `embedding`/`embed_error` is non-null. Split with
     * [[embedSuccesses]] / [[embedDeadLetters]]. The reference's async
     * operator emits a null poison pill on failure and the sink NPEs
     * (`…BedRockEmbeddingModelAsyncCustomMessage.java:109-117`); here a
     * failing record costs one dead-letter row, never the job. */
   def embedSafe(df: DataFrame, provider: EmbeddingProvider,
-                policy: graft.embed.RetryPolicy = graft.embed.RetryPolicy(),
+                policy: RetryPolicy = RetryPolicy(),
                 maxInFlight: Int = 1000): Dataset[EmbeddedAttempt] = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -120,13 +116,25 @@ object RagPipeline {
       }
   }
 
-  /** Successful attempts, shaped like [[embed]]'s output. */
+  /** Successful attempts, shaped like [[embed]]'s output. Column
+    * projections here and in [[embedOrFail]]: no row is decoded into
+    * objects and re-encoded. */
   def embedSuccesses(attempts: Dataset[EmbeddedAttempt]): Dataset[EmbeddedRecord] = {
     val spark = attempts.sparkSession
     import spark.implicits._
-    attempts.filter(_.embed_error == null)
-      .map(a => EmbeddedRecord(a.text, a.created_at, a._id, a.embedding,
-        a.inputTextTokenCount))
+    attempts.filter(col("embed_error").isNull).drop("embed_error").as[EmbeddedRecord]
+  }
+
+  /** Every attempt as a record, failing the task on the first dead one. */
+  private def embedOrFail(attempts: Dataset[EmbeddedAttempt]): Dataset[EmbeddedRecord] = {
+    val spark = attempts.sparkSession
+    import spark.implicits._
+    val failure = raise_error(concat(
+      lit("embedding failed for _id="), col("_id"), lit(": "), col("embed_error")))
+    attempts
+      .withColumn("embedding",
+        when(col("embed_error").isNull, col("embedding")).otherwise(failure))
+      .drop("embed_error").as[EmbeddedRecord]
   }
 
   /** Failed attempts → the embedding dead-letter channel:
@@ -148,49 +156,10 @@ object RagPipeline {
     * `chunking = Some((size, stride))` inserts the O3.5 passage stage. */
   def batch(raw: DataFrame, provider: EmbeddingProvider = StubEmbeddingProvider(),
             chunking: Option[(Int, Int)] = None): DataFrame =
-    batchStages(raw, provider, chunking)
-
-  /** Streaming topology: JSON-lines file source → same stages →
-    * `foreachBatch` parquet vector-table sink (micro-batch is Spark's native
-    * analogue of the reference's 1 ms bulk flush), idempotent per batch id
-    * so checkpoint replay cannot duplicate documents (the reference's
-    * at-least-once sink does, `DataStreamJob.java:191`). Read the result
-    * with [[graft.sink.VectorTable.readBatched]]. Caller owns
-    * `query.awaitTermination`/`processAllAvailable`. */
-  def streaming(
-      spark: SparkSession,
-      sourceDir: String,
-      outDir: String,
-      checkpointDir: String,
-      provider: EmbeddingProvider = StubEmbeddingProvider()) =
-    streamingTo(spark, sourceDir, graft.sink.ParquetVectorSink(outDir),
-      checkpointDir, provider)
-
-  /** [[streaming]] against any [[graft.sink.VectorSink]] — the pluggable-O5
-    * seam: the topology is identical whether documents land in the parquet
-    * table, driver memory, or an OpenSearch-shaped connector. */
-  def streamingTo(
-      spark: SparkSession,
-      sourceDir: String,
-      sink: graft.sink.VectorSink,
-      checkpointDir: String,
-      provider: EmbeddingProvider = StubEmbeddingProvider(),
-      chunking: Option[(Int, Int)] = None) = {
-    val raw = spark.readStream.schema(Schemas.wire).option("mode", "PERMISSIVE")
-      .json(sourceDir)
-      .select(to_json(struct(col("text"), col("created_at"))).as("value"))
-    val docs = batchStages(raw, provider, chunking)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        sink.appendIdempotent(batchDf, batchId)
-      }
-      .start()
-  }
+    toVectorDocs(embed(preEmbed(raw, chunking), provider))
 
   /** O1→O3(.5): parse, enrich, filter, optional chunk — the shared
-    * pre-embed stage sequence every topology (batch, streaming file,
-    * streaming Kafka, config runner) goes through. */
+    * pre-embed stage sequence every topology goes through. */
   def preEmbed(raw: DataFrame, chunking: Option[(Int, Int)] = None): DataFrame = {
     val filtered = filterNonEmpty(enrich(parseWire(raw)))
     chunking match {
@@ -199,52 +168,65 @@ object RagPipeline {
     }
   }
 
-  private def batchStages(raw: DataFrame, provider: EmbeddingProvider,
-                          chunking: Option[(Int, Int)] = None): DataFrame =
-    toVectorDocs(embed(preEmbed(raw, chunking), provider))
+  /** O4→O5 for one unit of work — a micro-batch, or a whole batch run —
+    * over [[preEmbed]] output. With a dead-letter dir, embed failures land
+    * in `<deadLetterDir>/<key>` (overwritten, so a replayed key replaces
+    * its dead letters) and successes go to `write`; the attempts are
+    * cached so the two writes read ONE embedding pass — uncached, every
+    * document would be embedded twice and a flaky record could land in
+    * both outputs or neither. Without
+    * one, nothing is cached and the first record that still fails after
+    * its retries fails the task ([[embed]]'s policy). */
+  private[pipeline] def embedAndSink(
+      pre: DataFrame,
+      provider: EmbeddingProvider,
+      policy: RetryPolicy,
+      maxInFlight: Int,
+      deadLetterDir: Option[String],
+      key: String)(write: DataFrame => Unit): Unit = {
+    val attempts = embedSafe(pre, provider, policy, maxInFlight)
+    deadLetterDir match {
+      case None => write(toVectorDocs(embedOrFail(attempts)))
+      case Some(dl) =>
+        val cached = attempts.cache()
+        try {
+          write(toVectorDocs(embedSuccesses(cached)))
+          embedDeadLetters(cached).write.mode("overwrite").parquet(s"$dl/$key")
+        } finally cached.unpersist()
+    }
+  }
 
-  /** [[streaming]] with the dead-letter-capturing embed stage: per micro
-    * batch, successes land in the idempotent vector table and embed
-    * failures in `deadLetterDir/batch=<id>` (same overwrite idempotence).
-    * The attempts Dataset is cached for the two writes so each document is
-    * embedded exactly once per batch. */
-  def streamingSafe(
-      spark: SparkSession,
-      sourceDir: String,
-      outDir: String,
-      deadLetterDir: String,
+  /** The streaming topology: any `value: string` stream
+    * ([[streamingFileSource]], [[streamingKafkaSource]]) → [[preEmbed]] →
+    * per micro-batch [[embedAndSink]] into `sink.appendIdempotent` under
+    * the key `batch=<id>`. Micro-batch is Spark's native analogue of the
+    * reference's 1 ms bulk flush; the idempotent per-batch write means
+    * checkpoint replay cannot duplicate documents (the reference's
+    * at-least-once sink does, `DataStreamJob.java:191`). Caller owns
+    * `query.awaitTermination`/`processAllAvailable`. */
+  def streaming(
+      raw: DataFrame,
+      sink: VectorSink,
       checkpointDir: String,
       provider: EmbeddingProvider = StubEmbeddingProvider(),
-      policy: graft.embed.RetryPolicy = graft.embed.RetryPolicy()) =
-    streamingSafeTo(spark, sourceDir, graft.sink.ParquetVectorSink(outDir),
-      deadLetterDir, checkpointDir, provider, policy)
-
-  /** [[streamingSafe]] against any [[graft.sink.VectorSink]]. */
-  def streamingSafeTo(
-      spark: SparkSession,
-      sourceDir: String,
-      sink: graft.sink.VectorSink,
-      deadLetterDir: String,
-      checkpointDir: String,
-      provider: EmbeddingProvider = StubEmbeddingProvider(),
-      policy: graft.embed.RetryPolicy = graft.embed.RetryPolicy(),
-      chunking: Option[(Int, Int)] = None) = {
-    val raw = spark.readStream.schema(Schemas.wire).option("mode", "PERMISSIVE")
-      .json(sourceDir)
-      .select(to_json(struct(col("text"), col("created_at"))).as("value"))
-    val enriched = preEmbed(raw, chunking)
-    enriched.writeStream
+      policy: RetryPolicy = RetryPolicy(),
+      maxInFlight: Int = 1000,
+      chunking: Option[(Int, Int)] = None,
+      deadLetterDir: Option[String] = None): StreamingQuery =
+    preEmbed(raw, chunking).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        val attempts = embedSafe(batchDf, provider, policy).cache()
-        try {
-          sink.appendIdempotent(toVectorDocs(embedSuccesses(attempts)), batchId)
-          embedDeadLetters(attempts)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
-        } finally attempts.unpersist()
+        embedAndSink(batchDf, provider, policy, maxInFlight, deadLetterDir,
+          s"batch=$batchId")(sink.appendIdempotent(_, batchId))
       }
       .start()
-  }
+
+  /** S1 — JSON-lines file source, reduced to the `value: string` wire
+    * shape ([[parseWire]] onward). */
+  def streamingFileSource(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(Schemas.wire).option("mode", "PERMISSIVE")
+      .json(dir)
+      .select(to_json(struct(col("text"), col("created_at"))).as("value"))
 
   // ------------------------------------------------------------ Kafka source
 
@@ -273,8 +255,8 @@ object RagPipeline {
     * `kafka.` -prefixed entries in `extra` (e.g.
     * `kafka.security.protocol=SASL_SSL`, SASL JAAS/IAM settings) pass
     * through to the consumer exactly as the reference forwards its MSK
-    * properties. Needs the spark-sql-kafka connector on the classpath at
-    * start; construction itself is lazy. */
+    * properties. Needs the spark-sql-kafka connector on the classpath:
+    * the data-source lookup fails here without it. */
   def streamingKafkaSource(
       spark: SparkSession,
       bootstrapServers: String,
@@ -286,28 +268,4 @@ object RagPipeline {
       .options(kafkaOptions(bootstrapServers, topic, startingOffsets, extra))
       .load()
       .selectExpr("CAST(value AS STRING) AS value")
-
-  /** Full streaming topology from Kafka: same stages as [[streaming]], with
-    * the idempotent per-batch vector-table sink (exactly-once effect under
-    * at-least-once replay — the duplicate-on-replay bug the reference ships,
-    * `DataStreamJob.java:191`). */
-  def streamingKafka(
-      spark: SparkSession,
-      bootstrapServers: String,
-      topic: String,
-      outDir: String,
-      checkpointDir: String,
-      startingOffsets: String = "earliest",
-      extra: Map[String, String] = Map.empty,
-      provider: EmbeddingProvider = StubEmbeddingProvider(),
-      chunking: Option[(Int, Int)] = None) = {
-    val sink = graft.sink.ParquetVectorSink(outDir)
-    val raw = streamingKafkaSource(spark, bootstrapServers, topic, startingOffsets, extra)
-    batchStages(raw, provider, chunking).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        sink.appendIdempotent(batchDf, batchId)
-      }
-      .start()
-  }
 }

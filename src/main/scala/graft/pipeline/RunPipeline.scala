@@ -31,17 +31,21 @@ import graft.embed.{EmbeddingModels, RetryPolicy, StubEmbeddingProvider}
   *  - `sink.authHeader` http: `Name: value` auth header (the SigV4
   *                      interceptor seam, `DataStreamJob.java:158-170`)
   *  - `sink.deadletter.dir`  http: NDJSON dead-letter dir for bulks that
-  *                      exhaust their retries
+  *                      exhaust their retries (streaming: under
+  *                      `batch=<id>/`). Absent → such a bulk fails the batch
   *  - `checkpoint.dir`  streaming checkpoint location
   *  - `model`           titan-v1 (default) | titan-v2 — reference registry
   *  - `embed.endpoint`  HTTP embedding endpoint URL → uses
   *                      [[graft.embed.HttpEmbeddingProvider]]; absent → the
   *                      deterministic stub (no-egress default)
-  *  - `embed.maxInFlight`  bounded concurrency (default 1000, the
-  *                      reference's `unorderedWait` capacity)
-  *  - `embed.maxAttempts`  retry attempts before dead-letter (default 3)
-  *  - `deadletter.dir`  where embed dead-letters land (batch + streaming;
-  *                      streaming uses the per-batch idempotent layout)
+  *  - `embed.maxInFlight`  bounded concurrency per partition, every mode
+  *                      (default 1000, the reference's `unorderedWait`
+  *                      capacity)
+  *  - `embed.maxAttempts`  attempts per record before it fails (default 3)
+  *  - `deadletter.dir`  where records that fail embedding land, every mode:
+  *                      `run=<source hash>` (batch) or `batch=<id>`
+  *                      (streaming), overwritten on replay. Absent → a
+  *                      record that fails embedding fails the batch
   *  - `chunk.size`      opt-in O3.5 passage chunking, every mode: window
   *                      size in tokens; `chunk.stride` (default = size)
   *                      sets the overlap stride
@@ -144,44 +148,27 @@ object RunPipeline {
     // explicit DDL stage, reference index-creation-lambda parity: the
     // table exists with its schema before any data flows
     sink.bootstrap()
+    val deadLetterDir = conf.get("deadletter.dir")
+    // mode only chooses the source: every mode runs the same embed → sink
+    // body (RagPipeline.embedAndSink)
     conf.mode match {
       case "batch" =>
         val raw = spark.read.text(conf("source.path")).toDF("value")
-        // cached: the dead-letter write and the sink write must read ONE
-        // embedding pass — an uncached plan would re-embed every document
-        // (double provider cost) and let a flaky record land in both
-        // outputs or neither
-        val attempts = RagPipeline.embedSafe(RagPipeline.preEmbed(raw, chunking),
-          provider, conf.retryPolicy, conf.maxInFlight).cache()
-        try {
-          conf.get("deadletter.dir").foreach { dl =>
-            // run-scoped OVERWRITE mirrors the streaming batch=<id> layout:
-            // re-running the same batch job replaces its dead-letters
-            // instead of appending duplicates (the run key is the source
-            // path, which identifies the batch input)
-            val runId = java.lang.Long.toHexString(
-              graft.functions.TextHashing.fnv64(conf("source.path")))
-            RagPipeline.embedDeadLetters(attempts)
-              .write.mode("overwrite").parquet(s"$dl/run=$runId")
-          }
-          sink.append(
-            RagPipeline.toVectorDocs(RagPipeline.embedSuccesses(attempts)))
-        } finally attempts.unpersist()
+        // the run key is the source path, which identifies the batch input:
+        // re-running the same batch job replaces its dead letters
+        val runId = java.lang.Long.toHexString(
+          graft.functions.TextHashing.fnv64(conf("source.path")))
+        RagPipeline.embedAndSink(RagPipeline.preEmbed(raw, chunking), provider,
+          conf.retryPolicy, conf.maxInFlight, deadLetterDir, s"run=$runId")(sink.append)
 
-      case "streaming" =>
-        val q = conf.get("deadletter.dir") match {
-          case Some(dl) => RagPipeline.streamingSafeTo(spark, conf("source.path"),
-            sink, dl, conf("checkpoint.dir"), provider, conf.retryPolicy, chunking)
-          case None => RagPipeline.streamingTo(spark, conf("source.path"),
-            sink, conf("checkpoint.dir"), provider, chunking)
-        }
-        awaitWithTimeout(q, conf)
-
-      case "streaming-kafka" =>
-        val q = RagPipeline.streamingKafka(spark, conf("kafka.bootstrap"),
-          conf("kafka.topic"), conf("sink.dir"), conf("checkpoint.dir"),
-          conf.getOrElse("kafka.startingOffsets", "earliest"),
-          conf.kafkaExtra, provider, chunking)
+      case mode =>
+        val raw =
+          if (mode == "streaming") RagPipeline.streamingFileSource(spark, conf("source.path"))
+          else RagPipeline.streamingKafkaSource(spark, conf("kafka.bootstrap"),
+            conf("kafka.topic"), conf.getOrElse("kafka.startingOffsets", "earliest"),
+            conf.kafkaExtra)
+        val q = RagPipeline.streaming(raw, sink, conf("checkpoint.dir"), provider,
+          conf.retryPolicy, conf.maxInFlight, chunking, deadLetterDir)
         awaitWithTimeout(q, conf)
     }
   }

@@ -31,9 +31,12 @@ import org.apache.spark.sql.functions._
   *    no-op, so item-level replay bookkeeping buys nothing);
   *  - a bulk that exhausts `maxAttempts` dead-letters its documents as
   *    NDJSON under `deadLetterDir` (one file per partition, overwritten on
-  *    task retry — no dead-letter duplication either) and the job
-  *    continues: one unreachable shard costs its documents a detour, not
-  *    the stream.
+  *    task retry — no dead-letter duplication either; [[appendIdempotent]]
+  *    keys them by batch) and the job continues: one unreachable shard
+  *    costs its documents a detour, not the stream;
+  *  - without a `deadLetterDir` that bulk fails the task instead — the
+  *    same policy as the embed stage: documents are never dropped
+  *    silently.
   *
   * Replay semantics — the fix for the reference's duplicate leak
   * (`DataStreamJob.java:191` comments out `.id(…)`, so every replayed
@@ -71,10 +74,13 @@ final case class HttpVectorSink(
   require(bulkMaxDocs > 0 && bulkMaxBytes > 0 && maxAttempts > 0)
 
   override def append(docs: DataFrame): Unit =
-    write(docs, docId(docs, prefix = None))
+    write(docs, docId(docs, prefix = None), this)
 
+  /** Dead letters go under `<deadLetterDir>/batch=<id>/`, so batch N+1's
+    * partition files cannot overwrite batch N's. */
   override def appendIdempotent(docs: DataFrame, batchId: Long): Unit =
-    write(docs, docId(docs, prefix = Some(batchId)))
+    write(docs, docId(docs, prefix = Some(batchId)),
+      copy(deadLetterDir = deadLetterDir.map(d => s"$d/batch=$batchId")))
 
   /** Deterministic doc id. With a batch prefix: replay-stable content
     * hash; without: the upstream `_id` when the frame has one — cast to
@@ -88,11 +94,13 @@ final case class HttpVectorSink(
       sha1(concat_ws("|", col("text"), col("date").cast("string")))
   }
 
-  private def write(docs: DataFrame, id: org.apache.spark.sql.Column): Unit = {
+  /** `cfg` is serialized into the task (this case class, not the
+    * DataFrame closure). */
+  private def write(docs: DataFrame, id: org.apache.spark.sql.Column,
+                    cfg: HttpVectorSink): Unit = {
     val cols = docs.columns.filterNot(_ == "_id").map(col)
     val payload = docs.select(id.as("_docid"),
       to_json(struct(cols.toIndexedSeq: _*)).as("_doc"))
-    val cfg = this // serialize the case class, not the DataFrame closure
     payload.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
       BulkWriter.writePartition(
@@ -108,7 +116,8 @@ private[sink] object BulkWriter {
 
   /** Buffers (id, docJson) pairs into `_bulk` NDJSON requests, flushing on
     * doc count, byte size, or buffer age; retries each bulk; dead-letters
-    * a bulk that exhausts its attempts. Returns (bulksSent, docsDeadLettered). */
+    * a bulk that exhausts its attempts, or throws when there is no
+    * dead-letter dir. Returns (bulksSent, docsDeadLettered). */
   def writePartition(rows: Iterator[(String, String)], cfg: HttpVectorSink,
                      partitionId: Int): (Int, Int) = {
     val client = HttpClient.newBuilder()
@@ -123,6 +132,10 @@ private[sink] object BulkWriter {
 
     def flush(): Unit = if (bufDocs.nonEmpty) {
       if (postWithRetry(client, cfg, buf.toString)) sent += 1
+      else if (cfg.deadLetterDir.isEmpty)
+        throw new java.io.IOException(s"_bulk to ${cfg.endpoint} failed after " +
+          s"${cfg.maxAttempts} attempts; ${bufDocs.size} documents not indexed " +
+          "and no deadLetterDir is set")
       else { dead += bufDocs.size; deadLetters ++= bufDocs }
       buf.clear(); bufDocs.clear()
     }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * OpenSearch (`…/DataStreamJob.java:172-193` builds an OpenSearch bulk
   * sink inline). Any store that can upsert `(passage_embedding, date,
   * text, _id)` documents drops in behind this trait; the pipeline code
-  * ([[graft.pipeline.RunPipeline]], the streaming topologies) depends only
-  * on the two write contracts:
+  * ([[graft.pipeline.RunPipeline]], [[graft.pipeline.RagPipeline.streaming]])
+  * depends only on the two write contracts:
   *
   *  - [[append]] — at-least-once append (replays may duplicate; pair with
   *    [[VectorTable.dedupeById]]-style compaction, or an upserting store);

@@ -12,21 +12,16 @@ import scala.concurrent.duration._
 
 import graft.embed.{EmbeddingStage, HttpEmbeddingProvider, RetryPolicy, StubEmbeddingProvider}
 
-/** The external-provider contract, against a REAL process boundary: a local
-  * JDK HttpServer with injected latency, 5xx faults, and hangs. This is what
-  * the reference's async operator exists for (reference
-  * `operators/asyncIO/BedRockEmbeddingModelAsyncCustomMessage.java:47-117`):
-  * overlapping many in-flight remote calls, surviving transient faults, and
-  * never letting one stuck call poison the stream. */
-class HttpEmbedSpec extends AnyFunSuite {
+object HttpEmbedSpec {
 
   /** Serves the Titan wire shape. Behavior keyed on the input text:
     * "flaky…" → 500 on the first two attempts, then 200;
     * "dead…"  → always 500;
     * "hang…"  → sleeps far beyond any client timeout;
     * otherwise → 200 after `latencyMs`, embedding from the deterministic
-    * stub so expected vectors are computable client-side. */
-  private def withServer(latencyMs: Long = 0)(
+    * stub so expected vectors are computable client-side. `body` gets the
+    * url, the requests in flight and their high-water mark. */
+  def withServer(latencyMs: Long = 0)(
       body: (String, AtomicInteger, AtomicInteger) => Unit): Unit = {
     val stub = StubEmbeddingProvider("titan-v2")
     val inFlight = new AtomicInteger(0)
@@ -42,6 +37,8 @@ class HttpEmbedSpec extends AnyFunSuite {
         // crude but sufficient: the test texts contain no escapes
         val text = req.split("\"inputText\"\\s*:\\s*\"")(1).takeWhile(_ != '"')
         def respond(code: Int, payload: String): Unit = {
+          // before the reply: the client may send its next call on receipt
+          inFlight.decrementAndGet()
           val bytes = payload.getBytes(StandardCharsets.UTF_8)
           ex.sendResponseHeaders(code, bytes.length)
           ex.getResponseBody.write(bytes)
@@ -61,12 +58,22 @@ class HttpEmbedSpec extends AnyFunSuite {
           respond(200,
             s"""{"embedding": [${r.embedding.mkString(", ")}], "inputTextTokenCount": ${r.inputTextTokenCount}}""")
         }
-      } catch { case _: InterruptedException => ex.close() }
+      } catch { case _: InterruptedException => inFlight.decrementAndGet(); ex.close() }
     })
     server.start()
     try body(s"http://127.0.0.1:${server.getAddress.getPort}/embed", inFlight, maxInFlight)
     finally server.stop(0)
   }
+}
+
+/** The external-provider contract, against a REAL process boundary: a local
+  * JDK HttpServer with injected latency, 5xx faults, and hangs. This is what
+  * the reference's async operator exists for (reference
+  * `operators/asyncIO/BedRockEmbeddingModelAsyncCustomMessage.java:47-117`):
+  * overlapping many in-flight remote calls, surviving transient faults, and
+  * never letting one stuck call poison the stream. */
+class HttpEmbedSpec extends AnyFunSuite {
+  import HttpEmbedSpec.withServer
 
   test("http provider round-trips the wire shape (vector + token count)") {
     withServer() { (url, _, _) =>

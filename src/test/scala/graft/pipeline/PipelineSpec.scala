@@ -136,6 +136,12 @@ class PipelineSpec extends AnyFunSuite {
     val ok = RagPipeline.embedSuccesses(attempts).collect()
     assert(ok.map(_._id).toSet === Set("id-good", "id-flaky"))
     assert(ok.forall(_.embedding.length === 8))
+    // embed (no dead letters) runs the same retrying loop: a transient
+    // failure recovers instead of failing the task
+    val viaEmbed = RagPipeline.embed(
+      Seq(("flaky via embed", "2024-01-01T00:00:00.000Z", "id-flaky-embed"))
+        .toDF("text", "created_at", "_id"), FlakyProvider).collect()
+    assert(viaEmbed.map(_._id).toSeq === Seq("id-flaky-embed"))
   }
 
   test("kafka options builder: structural keys protected, SASL passthrough") {
@@ -298,26 +304,7 @@ class PipelineSpec extends AnyFunSuite {
   test("batch dead-letters are run-scoped idempotent: rerun replaces, never appends") {
     // a permanently failing endpoint for texts starting with "dead": the
     // only way to mint real embed dead-letters through the config runner
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
-    val stub = StubEmbeddingProvider("titan-v2")
-    server.createContext("/embed", (ex: com.sun.net.httpserver.HttpExchange) => {
-      val req = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-      val text = req.split("\"inputText\"\\s*:\\s*\"")(1).takeWhile(_ != '"')
-      val (code, payload) =
-        if (text.startsWith("dead")) (500, """{"message": "permanent"}""")
-        else {
-          val r = stub.embed(text)
-          (200, s"""{"embedding": [${r.embedding.mkString(", ")}], "inputTextTokenCount": ${r.inputTextTokenCount}}""")
-        }
-      val bytes = payload.getBytes("UTF-8")
-      ex.sendResponseHeaders(code, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
-    })
-    server.start()
-    try {
+    HttpEmbedSpec.withServer() { (url, _, _) =>
       val src = java.nio.file.Files.createTempDirectory("graft-src-dl")
       java.nio.file.Files.write(src.resolve("in.jsonl"), Seq(
         """{"text": "good doc", "created_at": "2024-01-01T12:00:00.000Z"}""",
@@ -328,12 +315,83 @@ class PipelineSpec extends AnyFunSuite {
       val conf = PipelineConfig.parse(Seq(
         "mode=batch", s"source.path=$src", s"sink.dir=$sink",
         s"deadletter.dir=$dl", "model=titan-v2", "embed.maxAttempts=2",
-        s"embed.endpoint=http://127.0.0.1:${server.getAddress.getPort}/embed")).validated
+        s"embed.endpoint=$url")).validated
       RunPipeline.run(spark, conf)
       RunPipeline.run(spark, conf) // same batch re-run (operator retry)
       val dead = spark.read.parquet(dl)
       assert(dead.count() === 1, "rerun must replace the run's dead-letters")
       assert(dead.select("embed_error").as[String].head().contains("HTTP 500"))
-    } finally server.stop(0)
+    }
+  }
+
+  private def causes(t: Throwable): Iterator[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+
+  test("config runner: without deadletter.dir a record that fails embedding fails the batch") {
+    HttpEmbedSpec.withServer() { (url, _, _) =>
+      val src = java.nio.file.Files.createTempDirectory("graft-src-nodl")
+      java.nio.file.Files.write(src.resolve("in.jsonl"), Seq(
+        """{"text": "good doc", "created_at": "2024-01-01T12:00:00.000Z"}""",
+        """{"text": "dead doc", "created_at": "2024-01-01T12:00:01.000Z"}""")
+        .mkString("\n").getBytes("UTF-8"))
+      val sink = java.nio.file.Files.createTempDirectory("graft-sink-nodl").toString + "/out"
+      val conf = PipelineConfig.parse(Seq(
+        "mode=batch", s"source.path=$src", s"sink.dir=$sink", "model=titan-v2",
+        "embed.maxAttempts=2", s"embed.endpoint=$url")).validated
+      val e = intercept[Exception](RunPipeline.run(spark, conf))
+      assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("HTTP 500")), e)
+    }
+  }
+
+  /** Run a streaming config through `RunPipeline.run` (which blocks until
+    * its query stops) on a second thread: process everything available,
+    * then stop the query. */
+  private def runToCatchUp(conf: PipelineConfig): Unit = {
+    val before = spark.streams.active.map(_.id).toSet
+    @volatile var failure: Throwable = null
+    val runner = new Thread(() =>
+      try RunPipeline.run(spark, conf) catch { case e: Throwable => failure = e })
+    runner.setDaemon(true)
+    runner.start()
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    def started = spark.streams.active.find(q => !before(q.id))
+    while (started.isEmpty && failure == null && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    started.foreach(q => try q.processAllAvailable() finally q.stop())
+    runner.join(60000)
+    if (failure != null) throw failure
+    assert(!runner.isAlive, "RunPipeline.run did not return after its query stopped")
+  }
+
+  test("config runner: embed.maxInFlight bounds the embed calls in flight in streaming mode") {
+    HttpEmbedSpec.withServer(latencyMs = 50) { (url, _, maxSeen) =>
+      val root = java.nio.file.Files.createTempDirectory("graft-inflight")
+      val src = java.nio.file.Files.createDirectories(root.resolve("src"))
+      // one small file is one partition, so the per-partition bound is the
+      // whole bound
+      java.nio.file.Files.write(src.resolve("in.jsonl"), (1 to 12).map(i =>
+          s"""{"text": "doc $i", "created_at": "2024-01-01T12:00:00.000Z"}""")
+        .mkString("\n").getBytes("UTF-8"))
+      val out = root.resolve("out").toString
+      runToCatchUp(PipelineConfig.parse(Seq(
+        "mode=streaming", s"source.path=$src", s"sink.dir=$out",
+        s"checkpoint.dir=${root.resolve("ck")}", "model=titan-v2",
+        s"embed.endpoint=$url", "embed.maxInFlight=1")).validated)
+      assert(graft.sink.VectorTable.readBatched(spark, out).count() === 12)
+      assert(maxSeen.get() === 1)
+    }
+  }
+
+  test("config runner: streaming-kafka builds the configured http sink, fails only at the kafka source") {
+    val ck = java.nio.file.Files.createTempDirectory("graft-kafka-ck").toString
+    val conf = PipelineConfig.parse(Seq(
+      "mode=streaming-kafka", "kafka.bootstrap=127.0.0.1:9092", "kafka.topic=rag",
+      "sink.kind=http", "sink.endpoint=http://127.0.0.1:9", "sink.index=rag",
+      s"checkpoint.dir=$ck")).validated
+    // no spark-sql-kafka connector on the classpath: the data-source lookup
+    // is the first step that can fail once config and sink are built
+    val e = intercept[Exception](RunPipeline.run(spark, conf))
+    assert(causes(e).exists(c =>
+      String.valueOf(c.getMessage).contains("Failed to find data source: kafka")), e)
   }
 }

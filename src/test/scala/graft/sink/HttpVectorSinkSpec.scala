@@ -80,6 +80,33 @@ class HttpVectorSinkSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("idempotent dead letters are keyed by batch: batch N+1 keeps batch N's") {
+    val srv = new TestBulkServer(alwaysFail = true)
+    val dlq = Files.createTempDirectory("dlq-batch").toString
+    try {
+      val sink = HttpVectorSink(srv.url, "idx", maxAttempts = 1, deadLetterDir = Some(dlq))
+      sink.appendIdempotent(sampleDocs(3), batchId = 1)
+      sink.appendIdempotent(sampleDocs(5), batchId = 2)
+      def lines(batchId: Long) =
+        Option(new java.io.File(dlq, s"batch=$batchId").listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".jsonl"))
+          .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq)
+      assert(lines(1).size === 3)
+      assert(lines(2).size === 5)
+    } finally srv.stop()
+  }
+
+  test("without a deadLetterDir an exhausted bulk fails the task, never drops documents") {
+    val srv = new TestBulkServer(alwaysFail = true)
+    try {
+      val e = intercept[Exception](
+        HttpVectorSink(srv.url, "idx", maxAttempts = 2, initialBackoffMs = 5)
+          .append(sampleDocs(4)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("no deadLetterDir")), e)
+    } finally srv.stop()
+  }
+
   test("idempotent replay: re-putting batch N converges instead of duplicating") {
     val srv = new TestBulkServer()
     try {
@@ -144,8 +171,8 @@ class HttpVectorSinkSpec extends AnyFunSuite {
             s"""{"text": "streamed passage $i", "created_at": "2024-03-01T08:00:0$i.000Z"}""")
           .mkString("\n").getBytes(StandardCharsets.UTF_8))
       val sink = HttpVectorSink(srv.url, "rag-index")
-      val q = graft.pipeline.RagPipeline.streamingTo(
-        spark, src.toString, sink, ckpt)
+      val q = graft.pipeline.RagPipeline.streaming(
+        graft.pipeline.RagPipeline.streamingFileSource(spark, src.toString), sink, ckpt)
       try q.processAllAvailable() finally q.stop()
       assert(srv.docs.size === 6)
       assert(srv.docs.values().toArray.exists(_.toString.contains("streamed passage 3")))

@@ -284,9 +284,11 @@ class StreamingSpec extends AnyFunSuite {
       """{"text": "a poison document", "created_at": "2024-01-01T00:00:01.000Z"}""",
       """{"text": "good document two", "created_at": "2024-01-01T00:00:02.000Z"}""")
     Files.write(java.nio.file.Paths.get(s"$srcDir/w.json"), lines.mkString("\n").getBytes)
-    val query = graft.pipeline.RagPipeline.streamingSafe(spark, srcDir, outDir, dlDir,
-      ckDir, graft.pipeline.PipelineSpec.FlakyProvider,
-      graft.embed.RetryPolicy(maxAttempts = 2, initialBackoffMs = 1))
+    val query = graft.pipeline.RagPipeline.streaming(
+      graft.pipeline.RagPipeline.streamingFileSource(spark, srcDir),
+      graft.sink.ParquetVectorSink(outDir), ckDir, graft.pipeline.PipelineSpec.FlakyProvider,
+      graft.embed.RetryPolicy(maxAttempts = 2, initialBackoffMs = 1),
+      deadLetterDir = Some(dlDir))
     try query.processAllAvailable() finally query.stop()
     val ok = graft.sink.VectorTable.readBatched(spark, outDir)
     assert(ok.count() === 2)
@@ -304,8 +306,9 @@ class StreamingSpec extends AnyFunSuite {
     val lines = docs.toJSON.collect()
     Files.write(java.nio.file.Paths.get(s"$srcDir/wave1.json"),
       lines.take(20).mkString("\n").getBytes)
-    val query = graft.pipeline.RagPipeline.streaming(spark, srcDir, outDir, ckDir,
-      graft.embed.StubEmbeddingProvider("titan-v2"))
+    val query = graft.pipeline.RagPipeline.streaming(
+      graft.pipeline.RagPipeline.streamingFileSource(spark, srcDir),
+      graft.sink.ParquetVectorSink(outDir), ckDir, graft.embed.StubEmbeddingProvider("titan-v2"))
     try {
       query.processAllAvailable()
       Files.write(java.nio.file.Paths.get(s"$srcDir/wave2.json"),
@@ -373,7 +376,8 @@ class StreamingSpec extends AnyFunSuite {
     def wireLine(i: Int) =
       s"""{"text": "recovery doc $i", "created_at": "2024-01-01T12:00:00.000Z"}"""
     def startQuery() = graft.pipeline.RagPipeline.streaming(
-      spark, srcDir, outDir, ckDir, graft.embed.StubEmbeddingProvider("titan-v2"))
+      graft.pipeline.RagPipeline.streamingFileSource(spark, srcDir),
+      graft.sink.ParquetVectorSink(outDir), ckDir, graft.embed.StubEmbeddingProvider("titan-v2"))
 
     Files.writeString(java.nio.file.Path.of(srcDir, "a.jsonl"),
       (0 until 15).map(wireLine).mkString("\n"))
@@ -418,7 +422,8 @@ class StreamingSpec extends AnyFunSuite {
       .select($"text", lit("2024-01-01T12:00:00.000Z").as("created_at"))
     Files.write(java.nio.file.Paths.get(s"$srcDir/w.json"),
       docs.toJSON.collect().mkString("\n").getBytes)
-    val query = graft.pipeline.RagPipeline.streamingTo(spark, srcDir,
+    val query = graft.pipeline.RagPipeline.streaming(
+      graft.pipeline.RagPipeline.streamingFileSource(spark, srcDir),
       graft.sink.ParquetVectorSink(outDir), ckDir,
       graft.embed.StubEmbeddingProvider("titan-v2"), chunking = Some((16, 16)))
     try query.processAllAvailable() finally query.stop()

@@ -16,8 +16,9 @@ object CoreScaling {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val k = args(1).toInt
-    // same bound as ReplicateDocs: replica id offsets are r*10M, so doc_ids
-    // must stay below 10M and k small enough that offsets never collide
+    // a sanity bound on the replication size: all k replicas are pinned in
+    // memory at once (replica ids are offset by r*10M in Long arithmetic,
+    // so they stay distinct for any k while sf doc_ids are below 10M)
     require(k >= 1 && k <= 100, s"k must be in [1, 100]: $k")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder().master(s"local[$cpus]")
