@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
   * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) …
+  * the session builder's .withExtensions(new GraftExtensions) …
   * }}}
   *
   * after which `SELECT cosine_sim(a, b)`, `fnv64(text)`,

@@ -146,8 +146,8 @@ object SparkEntry {
     // it materializes inside the first downstream action.
     // r21 §2.6 NEGATIVE RESULT (journal): widening this pinned join output
     // (an explicit repartition by doc_id, since reverted) before the
-    // checkpoint was implemented and measured WORSE at sf0.1/local[32]
-    // (interleaved PairTimer: q_ccnet_buckets 4.60 → 6.19 s,
+    // checkpoint was implemented and measured WORSE at sf0.1 on 32 cores
+    // (interleaved tools.Profile: q_ccnet_buckets 4.60 → 6.19 s,
     // q_ccnet_sample 4.39 → 6.85 s) even
     // though the trigram explodes then ran 32-way instead of 1-way —
     // allocation-heavy string work contends catastrophically at 32-way on

@@ -61,9 +61,14 @@ final case class HttpEmbeddingProvider(
 
 /** Minimal JSON encode/decode for the embedding wire shape — enough for the
   * `inputText` request and the `embedding`/`inputTextTokenCount` response,
-  * with full string escaping, so no JSON library dependency is needed. */
-private[embed] object JsonCodec {
+  * so no JSON library dependency is needed. */
+object JsonCodec {
 
+  /** `s` as a JSON string literal: quote, backslash and every control char
+    * below 0x20 escaped, everything else (non-ASCII included) passed
+    * through. The one escaper of the bulk sink, Bench and Verify too: a
+    * stray tab or CR in a SQL text or error message would otherwise make a
+    * reader's `json.load` fail. */
   def quote(s: String): String = {
     val b = new StringBuilder(s.length + 2).append('"')
     s.foreach {

@@ -619,9 +619,9 @@ object Dedup {
       // dedup — dropDuplicates needs exactly that clustering, so ONE
       // explicit cores-wide exchange serves dedup AND verify layout
       // where dedup's own exchange plus a round-robin repartition
-      // previously moved the full candidate set twice (StageTime: the
+      // previously moved the full candidate set twice (tools.Profile stages: the
       // second exchange alone was wall 1.5 s / 45 MB at sf0.1; interleaved
-      // PairTimer A/B: q_prefix_jaccard 4.96/5.04 s → 3.38 s). Width ≤ 0
+      // tools.Profile A/B: q_prefix_jaccard 4.96/5.04 s → 3.38 s). Width ≤ 0
       // (the cluster opt-out) keeps dedup's own AQE-planned exchange.
       .transform(c => if (Par.width(c) <= 0) c
                       else c.repartition(Par.width(c), col("id_a"), col("id_b")))

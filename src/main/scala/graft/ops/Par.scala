@@ -17,11 +17,11 @@ import scala.concurrent.ExecutionContext.Implicits.global
   *
   * NEGATIVE RESULT (r21 journal): the same widening applied to the
   * pinned KN trigram-type table and the ccnet langid-tagged corpus was
-  * implemented and measured WORSE at sf0.1/local[32] (interleaved
-  * PairTimer: q_kn_logprob 2.14 → 3.03 s, q_ccnet_buckets 4.60 → 6.19 s)
+  * implemented and measured WORSE at sf0.1 on 32 cores (interleaved
+  * tools.Profile: q_kn_logprob 2.14 → 3.03 s, q_ccnet_buckets 4.60 → 6.19 s)
   * even though the downstream explodes then ran 32-way instead of 1–4-way
   * — allocation-heavy string work contends catastrophically at full width
-  * on this box (StageTime: ccnet trigram-explode task-time sum 1.3 →
+  * on this box (tools.Profile stages: ccnet trigram-explode task-time sum 1.3 →
   * 21.3 s for a wall LOSS). Widening is only safe where the downstream is
   * integer/array compute, so it stays a per-seam decision, not a blanket
   * post-checkpoint policy.

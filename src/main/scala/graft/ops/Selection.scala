@@ -230,10 +230,10 @@ object Selection {
     // r21 §2.6 NEGATIVE RESULT (journal): widening the pinned type table
     // to the session's parallelism (an explicit repartition by _g3, since
     // reverted) before the checkpoint was implemented and measured WORSE
-    // at sf0.1/local[32] (interleaved PairTimer: q_kn_logprob 2.14 →
+    // at sf0.1 on 32 cores (interleaved tools.Profile: q_kn_logprob 2.14 →
     // 3.03 s, q_kn_curate 2.90 → 4.15 s). The six grain aggregates' map
     // sides are
-    // allocation-heavy and contend at 32-way on this box (StageTime:
+    // allocation-heavy and contend at 32-way on this box (tools.Profile stages:
     // task-time sum inflated ~10× with no wall win), so the AQE-coalesced
     // narrow layout is the right local shape. Reverted; at cluster scale
     // the type table arrives wide from its own grain exchange anyway.

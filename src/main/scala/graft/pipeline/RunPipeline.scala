@@ -57,13 +57,23 @@ final case class PipelineConfig(settings: Map[String, String]) {
   def apply(key: String): String = settings.getOrElse(key,
     throw new IllegalArgumentException(s"missing required config key: $key"))
   def getOrElse(key: String, default: String): String = settings.getOrElse(key, default)
+  def int(key: String): Option[Int] = number(key)(_.toInt)
+  def long(key: String): Option[Long] = number(key)(_.toLong)
+  /** A numeric key's value; a malformed one fails naming its key, not with
+    * a bare NumberFormatException. */
+  private def number[T](key: String)(parse: String => T): Option[T] =
+    get(key).map { v =>
+      try parse(v)
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"config key $key must be an integer, got: '$v'") }
+    }
 
   def mode: String = getOrElse("mode", "batch")
   def modelAlias: String = getOrElse("model", "titan-v1")
   def sinkKind: String = getOrElse("sink.kind", "parquet")
-  def maxInFlight: Int = getOrElse("embed.maxInFlight", "1000").toInt
+  def maxInFlight: Int = int("embed.maxInFlight").getOrElse(1000)
   def retryPolicy: RetryPolicy =
-    RetryPolicy(maxAttempts = getOrElse("embed.maxAttempts", "3").toInt)
+    RetryPolicy(maxAttempts = int("embed.maxAttempts").getOrElse(3))
   def kafkaExtra: Map[String, String] =
     settings.collect { case (k, v) if k.startsWith("kafka.option.") =>
       k.stripPrefix("kafka.option.") -> v }
@@ -128,9 +138,9 @@ object RunPipeline {
       case "http" => graft.sink.HttpVectorSink(
         endpoint = conf("sink.endpoint"),
         index = conf("sink.index"),
-        bulkMaxDocs = conf.getOrElse("sink.bulkMaxDocs", "500").toInt,
-        flushIntervalMs = conf.getOrElse("sink.flushMs", "200").toLong,
-        maxAttempts = conf.getOrElse("sink.maxAttempts", "3").toInt,
+        bulkMaxDocs = conf.int("sink.bulkMaxDocs").getOrElse(500),
+        flushIntervalMs = conf.long("sink.flushMs").getOrElse(200L),
+        maxAttempts = conf.int("sink.maxAttempts").getOrElse(3),
         authHeader = conf.get("sink.authHeader").map { h =>
           h.split(":", 2) match {
             case Array(k, v) => (k.trim, v.trim)
@@ -143,8 +153,8 @@ object RunPipeline {
     }
     // opt-in O3.5 passage chunking for EVERY mode: chunk.size=<tokens>
     // (chunk.stride defaults to size → disjoint windows)
-    val chunking: Option[(Int, Int)] = conf.get("chunk.size").map { sz =>
-      (sz.toInt, conf.getOrElse("chunk.stride", sz).toInt) }
+    val chunking: Option[(Int, Int)] = conf.int("chunk.size").map { sz =>
+      (sz, conf.int("chunk.stride").getOrElse(sz)) }
     // explicit DDL stage, reference index-creation-lambda parity: the
     // table exists with its schema before any data flows
     sink.bootstrap()
@@ -175,7 +185,7 @@ object RunPipeline {
 
   private def awaitWithTimeout(q: org.apache.spark.sql.streaming.StreamingQuery,
                                conf: PipelineConfig): Unit = {
-    val timeoutS = conf.getOrElse("timeout.s", "0").toLong
+    val timeoutS = conf.long("timeout.s").getOrElse(0L)
     if (timeoutS > 0) { q.awaitTermination(timeoutS * 1000); q.stop() }
     else q.awaitTermination()
   }

@@ -7,6 +7,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.embed.JsonCodec
+
 /** Network O5: HTTP bulk-indexing [[VectorSink]] — the process-boundary
   * implementation of the reference's OpenSearch sink
   * (`…/DataStreamJob.java:172-193`: `OpensearchSinkBuilder` with
@@ -142,8 +144,8 @@ private[sink] object BulkWriter {
 
     for ((id, doc) <- rows) {
       if (bufDocs.isEmpty) bufSince = System.nanoTime()
-      buf.append("{\"index\":{\"_index\":").append(jsonStr(cfg.index))
-        .append(",\"_id\":").append(jsonStr(id)).append("}}\n")
+      buf.append("{\"index\":{\"_index\":").append(JsonCodec.quote(cfg.index))
+        .append(",\"_id\":").append(JsonCodec.quote(id)).append("}}\n")
         .append(doc).append('\n')
       bufDocs += ((id, doc))
       val aged = (System.nanoTime() - bufSince) / 1000000L >= cfg.flushIntervalMs
@@ -201,20 +203,6 @@ private[sink] object BulkWriter {
   private[sink] def hasItemErrors(body: String): Boolean =
     errorsTrue.findFirstIn(body).isDefined
 
-  private def jsonStr(s: String): String = {
-    val b = new StringBuilder(s.length + 2).append('"')
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
-
   /** One NDJSON dead-letter file per partition, OVERWRITTEN on task retry
     * so replayed partitions never duplicate their dead letters. Hadoop FS
     * API for object-store parity (same reasoning as
@@ -227,7 +215,7 @@ private[sink] object BulkWriter {
       fs.mkdirs(path.getParent)
       val out = fs.create(path, /* overwrite = */ true)
       try docs.foreach { case (id, doc) =>
-        out.write(s"""{"_id":${jsonStr(id)},"doc":$doc}\n"""
+        out.write(s"""{"_id":${JsonCodec.quote(id)},"doc":$doc}\n"""
           .getBytes(StandardCharsets.UTF_8))
       } finally out.close()
     }

@@ -86,6 +86,13 @@ class HttpEmbedSpec extends AnyFunSuite {
     }
   }
 
+  test("JsonCodec.quote escapes quote, backslash and control chars, passes non-ASCII through") {
+    import graft.embed.JsonCodec.quote
+    assert(quote("a\"b\\c") === "\"a\\\"b\\\\c\"")
+    assert(quote("1\n2\r3\t4\u0001") === "\"1\\n2\\r3\\t4\\u0001\"")
+    assert(quote("naïve 東京 €") === "\"naïve 東京 €\"")
+  }
+
   test("bounded concurrency genuinely overlaps remote latency") {
     withServer(latencyMs = 100) { (url, _, maxSeen) =>
       val p = HttpEmbeddingProvider(url)

@@ -278,6 +278,15 @@ class PipelineSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("config runner: a malformed numeric key fails naming the key") {
+    val conf = PipelineConfig.parse(Seq(
+      "mode=batch", "source.path=/nonexistent", "sink.kind=http",
+      "sink.endpoint=http://127.0.0.1:9", "sink.index=rag",
+      "sink.bulkMaxDocs=abc")).validated
+    val e = intercept[IllegalArgumentException](RunPipeline.run(spark, conf))
+    assert(e.getMessage.contains("sink.bulkMaxDocs"), e)
+  }
+
   test("sink.kind=memory drives a second VectorSink implementation end-to-end") {
     val src = java.nio.file.Files.createTempDirectory("graft-src-m")
     java.nio.file.Files.write(src.resolve("in.jsonl"),

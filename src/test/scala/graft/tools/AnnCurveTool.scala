@@ -1,11 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Knn
 
-/** Commit-grade ANN quality curve (r15 VERDICT item 5): recall@10 and
+/** Produces ANN_CURVE.json.
+  *
+  * Commit-grade ANN quality curve (r15 VERDICT item 5): recall@10 and
   * probe scan cost vs nProbe for IVF and IVF-PQ against brute-force
   * cosine truth on the embeddings fixture — the index-tuning evidence a
   * production deploy reads before picking nProbe. Same index-build
@@ -22,14 +23,7 @@ object AnnCurveTool {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) args(1) else "ANN_CURVE.json"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session("graft-ann-curve")
     val emb = graft.Tables.embeddings(spark, sfDir)
     val sample = emb.select("embedding").limit(256).collect()
       .map(_.getSeq[Float](0).toArray)

@@ -1,8 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Core-count scaling probe at amortized data size (r21, the r20-verdict
+/** Produces the `corescaling_*` rows of SCALING_r21.json.
+  *
+  * Core-count scaling probe at amortized data size (r21, the r20-verdict
   * "demonstrate one scaling win at a bigger SF" item): replicates the
   * sf0.1 documents k× IN MEMORY (vowel-rotation cycling — texts repeat
   * above k=5, which is valid for PER-DOC ops: the KN scorer never pairs
@@ -20,26 +21,10 @@ object CoreScaling {
     // memory at once (replica ids are offset by r*10M in Long arithmetic,
     // so they stay distinct for any k while sf doc_ids are below 10M)
     require(k >= 1 && k <= 100, s"k must be in [1, 100]: $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val step = 10000000L
-    val vowelMaps = Array("aeiou", "eioua", "iouae", "ouaei", "uaeio")
-    val docs0 = graft.Tables.documents(spark, dir).select("doc_id", "text")
-    val docs = (0 until k).map { r =>
-      val withId = docs0.withColumn("doc_id", col("doc_id") + lit(r * step))
-      if (r % 5 == 0) withId
-      else withId.withColumn("text",
-        translate(col("text"), "aeiou", vowelMaps(r % 5)))
-    }.reduce(_ unionByName _)
-      .repartition(cpus.toInt * 2).localCheckpoint(true)
+    val spark = graft.Bench.session("graft-core-scaling")
+    val cpus = spark.sparkContext.defaultParallelism
+    val docs = Replica.docs(graft.Tables.documents(spark, dir).select("doc_id", "text"), k)
+      .repartition(cpus * 2).localCheckpoint(true)
     val n = docs.count()
     val cal = graft.Bench.calibrate()
     val calPar = graft.Bench.calibrateParallel()

@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** KN pruning trade-off artifact (run on demand, commits KN_PRUNE_CURVE.json):
+/** Produces KN_PRUNE_CURVE.json.
+  *
+  * KN pruning trade-off artifact (run on demand):
   * the KenLM size-vs-quality curve for [[graft.ops.Selection.knTrain]]'s
   * count threshold — train on 3/4 of the sf0.1 documents corpus, score the
   * held-out 1/4 under models pruned at minCount ∈ {1, 2, 3, 4, 8}, and
@@ -18,12 +19,7 @@ import org.apache.spark.sql.functions._
 object KnPruneCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session("graft-kn-prune-curve")
     val docs = graft.Tables.documents(spark, sfDir)
       .filter(col("text").isNotNull)
     val train = docs.filter(pmod(col("doc_id"), lit(4)) =!= 0)

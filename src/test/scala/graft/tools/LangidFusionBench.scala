@@ -1,9 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Fused-vs-folds scoring pairing for the langidNb kernel (r16 verdict
+/** Produces LANGID_FUSION.json.
+  *
+  * Fused-vs-folds scoring pairing for the langidNb kernel (r16 verdict
   * #2's "measured win at nLangs ≥ 8"): times the r16 formulation — one
   * interpreted `aggregate()` HOF fold PER CLASS over the materialized
   * trigram-bucket array — against the fused
@@ -19,14 +21,7 @@ import org.apache.spark.sql.functions._
 object LangidFusionBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session("graft-langid-fusion")
     val buckets = 1024
     // 32× self-union (id-shifted): the base sf0.1 corpus is 5k short docs
     // whose whole scan is ~80 ms — too small for the scoring kernel to
@@ -35,9 +30,7 @@ object LangidFusionBench {
       .filter(col("text").isNotNull)
       .select(col("doc_id"), lower(trim(col("text"))).as("_t"))
       .filter(length(col("_t")) >= 3)
-    val docs = (0 until 32).map(r =>
-        base.select((col("doc_id") + lit(r * 10000000L)).as("doc_id"), col("_t")))
-      .reduce(_ unionByName _)
+    val docs = Replica.shifted(base, 32, Seq("doc_id"))()
       .repartition(spark.sparkContext.defaultParallelism)
       .localCheckpoint(true)
     val n = docs.count()

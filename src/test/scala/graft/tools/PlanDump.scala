@@ -1,7 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-
-/** Dump `.explain("formatted")` for named SparkEntry queries to files —
+/** Produces the plans/<round>/ evidence (plans/r20, plans/r21).
+  *
+  * Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the round's plans/<round>/<query>_{before,after}.txt evidence. Usage:
   *   runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> q_a q_b …
   * writes <outDir>/<name>_<suffix>.txt per query. Uses the bench's exact
@@ -10,15 +10,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session("graft-plan-dump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)

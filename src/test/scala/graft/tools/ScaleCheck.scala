@@ -1,9 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale-linearity harness (not a ScalaTest — run on demand):
+/** Produces SCALECHECK_r*.jsonl and the `scalecheck_k4` rows of
+  * SCALING_r21.json.
+  *
+  * Scale-linearity harness (not a ScalaTest — run on demand):
   *
   * {{{
   * sbt "Test/runMain graft.tools.ScaleCheck"          # k = 1,2,4 at sf0.1
@@ -30,39 +33,8 @@ object ScaleCheck {
     // byte-identical to replica r-5 (map r % 5 repeats, and map 0 is the
     // identity), re-introducing the quadratic-output trap documented above
     require(ks.max <= 5, s"k must be ≤ 5 (distinct replica alphabets), got $ks")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val step = 10000000L
-    // replica-specific vowel rotation: every word containing a vowel
-    // changes, so cross-replica token/shingle overlap collapses while
-    // within-replica pair structure stays identical to the original
-    val vowelMaps = Array("aeiou", "eioua", "iouae", "ouaei", "uaeio")
-    def replicateDocs(df: DataFrame, k: Int): DataFrame =
-      (0 until k).map { r =>
-        val withId = df.withColumn("doc_id", col("doc_id") + lit(r * step))
-        if (r == 0) withId
-        else withId.withColumn("text",
-          translate(col("text"), "aeiou", vowelMaps(r % vowelMaps.length)))
-      }.reduce(_ unionByName _)
-    // replica-specific circular shift: shifted random vectors are ~orthogonal
-    // to every other replica's, so cosine pairs stay within a replica
-    def replicateEmb(df: DataFrame, dim: Int, k: Int): DataFrame =
-      (0 until k).map { r =>
-        val withId = df.withColumn("vec_id", col("vec_id") + lit(r * step))
-        if (r == 0) withId
-        else withId.withColumn("embedding",
-          concat(slice(col("embedding"), r + 1, dim - r),
-            slice(col("embedding"), 1, r)))
-      }.reduce(_ unionByName _)
+    val spark = graft.Bench.session("graft-scalecheck")
+    val step = Replica.Step
 
     // SPARK_GRAFT_SCALE_OPS=a,b runs just those ops (dev loop for a new
     // entry without the full ~20-op sweep); skipped ops record NaN, which
@@ -78,14 +50,6 @@ object ScaleCheck {
       sec
     }
 
-    // events replicate by user-id shift: users (and so funnels, cohorts,
-    // sessions) pair only within their replica — event volume and per-user
-    // structure both scale linearly with k
-    def replicateEvents(df: DataFrame, k: Int): DataFrame =
-      (0 until k).map { r =>
-        df.withColumn("user_id", col("user_id") + lit(r * step))
-          .withColumn("event_id", col("event_id") + lit(r * step))
-      }.reduce(_ unionByName _)
     // the adversarial tail for the funnel ops: one bot user whose event
     // count grows with k (20k views per replica unit, then one click +
     // purchase) — the de-skewed single-shuffle fold must stay linear, and
@@ -242,7 +206,7 @@ object ScaleCheck {
     // becomes all-duplicate — semantics change, no blowup.)
     val deltaFixed = docs
       .withColumn("doc_id", col("doc_id") + lit(9L * step))
-      .withColumn("text", translate(col("text"), "aeiou", vowelMaps(4)))
+      .withColumn("text", Replica.rotateVowels(col("text"), 4))
       .localCheckpoint(true)
     // Fixed delta for the incremental-ER check: the r=4 Caesar alphabet
     // (shift 20) is never a base replica alphabet at k ≤ 4, so delta keys
@@ -250,22 +214,22 @@ object ScaleCheck {
     // base artifact scan (the deltaFixed stance, sorted-key edition)
     val partKeyed = graft.Tables.part(spark, sfDir)
       .select(col("p_partkey").as("id"), lower(trim(col("p_name"))).as("_key"))
-    def replicateKeyedNames(k: Int): DataFrame = (0 until k).map { r =>
-      val sft = (r * 5) % 26
-      val b = partKeyed.withColumn("id", col("id") + lit(r * step))
-      if (r == 0) b
-      else b.withColumn("_key",
-        translate(col("_key"), alpha, alpha.drop(sft) + alpha.take(sft)))
-    }.reduce(_ unionByName _)
+    def replicateKeyedNames(k: Int): DataFrame =
+      Replica.shifted(partKeyed, k, Seq("id")) { (b, r) =>
+        val sft = (r * 5) % 26
+        if (r == 0) b
+        else b.withColumn("_key",
+          translate(col("_key"), alpha, alpha.drop(sft) + alpha.take(sft)))
+      }
     val erDelta = partKeyed.filter(col("id") % 9 === 0)
       .withColumn("id", col("id") + lit(9L * step))
       .withColumn("_key", translate(col("_key"), alpha,
         alpha.drop(20) + alpha.take(20)))
       .localCheckpoint(true)
     for (k <- ks) {
-      val d = replicateDocs(docs, k).localCheckpoint(true)
-      val e = replicateEmb(emb, 64, k).localCheckpoint(true)
-      val ev = plantHotUser(replicateEvents(events, k), k).localCheckpoint(true)
+      val d = Replica.docs(docs, k).localCheckpoint(true)
+      val e = Replica.embeddings(emb, k, dim = 64, stride = 1).localCheckpoint(true)
+      val ev = plantHotUser(Replica.events(events, k), k).localCheckpoint(true)
       val nd = d.count(); val ne = e.count(); val nev = ev.count()
       results(("exact_dedup", k)) = timed("exact_dedup", k, nd) {
         graft.ops.Dedup.exactDedup(d, "text", "doc_id").count()
@@ -337,11 +301,8 @@ object ScaleCheck {
       if (opsFilter.forall(_.contains("nng_batch_queries"))) {
         results(("nng_batch_queries", k)) = timed("nng_batch_queries", k,
           50L * k) {
-          val panel = (0 until k).map { r =>
-            emb.filter(pmod(col("vec_id"), lit(41)) === 5)
-              .select((col("vec_id") + lit(r * step)).as("qid"),
-                col("embedding"))
-          }.reduce(_ unionByName _)
+          val panel = Replica.shifted(emb.filter(pmod(col("vec_id"), lit(41)) === 5)
+            .select(col("vec_id").as("qid"), col("embedding")), k, Seq("qid"))()
           val entries = graft.ops.NnDescent.routedEntryFrame(panel, "qid",
             "embedding", centroids, anchBase, nEntries = 4)
           graft.ops.NnDescent.beamSearchBatch(nngBase, emb, "embedding",
@@ -792,10 +753,7 @@ object ScaleCheck {
       }
       // orders ×k on both snapshot sides: one full-outer equi-join
       results(("snapshot_diff", k)) = timed("snapshot_diff", k, nev) {
-        val o = (0 until k).map(r =>
-          graft.Tables.orders(spark, sfDir)
-            .withColumn("o_orderkey", col("o_orderkey") + lit(r * step)))
-          .reduce(_ unionByName _)
+        val o = Replica.shifted(graft.Tables.orders(spark, sfDir), k, Seq("o_orderkey"))()
         graft.ops.Funnel.snapshotDiff(
           o.filter(col("o_orderkey") % 5 =!= 0)
             .select(col("o_orderkey"), col("o_totalprice")),

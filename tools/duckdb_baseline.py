@@ -21,7 +21,7 @@ def main():
               "lineitem", "events", "documents", "embeddings"]:
         p = f"{sf_dir}/{t}.parquet"
         # a Spark-written table is a DIRECTORY of part files (the
-        # ReplicateDocs pairing dirs); the driver's testdata are single files
+        # graft.tools.Replicate pairing dirs); the generated testdata are single files
         if os.path.isdir(p):
             p = f"{p}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
