@@ -3,6 +3,7 @@ package graft.embed
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, Executors}
 
 /** Generic HTTP/JSON embedding provider — the process-boundary-crossing
   * implementation of [[EmbeddingProvider]] that the reference's async
@@ -14,19 +15,24 @@ import java.nio.charset.StandardCharsets
   *
   * No cloud SDK: plain `java.net.http.HttpClient` (JDK 11+). Request:
   * `POST {"inputText": "…"}`; response: `{"embedding": [f, …],
-  * "inputTextTokenCount": n}`.
+  * "inputTextTokenCount": n}`. [[embedAsync]] is `sendAsync`: a call in
+  * flight holds no thread, so [[EmbeddingStage.embedIteratorSafe]] keeps
+  * up to its whole bound of calls open.
   *
   * Failure contract (what [[EmbeddingStage.embedIteratorSafe]] relies on):
   *  - non-2xx → `IOException` (retryable, then dead-letter);
   *  - connect/read beyond the configured timeouts → `HttpTimeoutException`
-  *    (an `IOException` — the call is SELF-bounding, it can't hold a
-  *    concurrency permit past `requestTimeoutMs`);
-  *  - thread interrupt (a cancelled in-flight call) → `InterruptedException`
-  *    propagates and releases the permit.
+  *    (an `IOException`): each attempt ends by itself within
+  *    `requestTimeoutMs`, and the record's permit comes back when it does;
+  *  - cancelling the [[embedAsync]] future (a blown record budget, or a
+  *    killed task's window) aborts the exchange; the permit is released by
+  *    the cancel itself;
+  *  - thread interrupt of a blocking [[embed]] → `InterruptedException`
+  *    propagates.
   *
-  * Thread-safe: `HttpClient` is immutable/thread-safe and `@transient lazy`
-  * so the case class serializes to executors and each JVM builds its own
-  * client.
+  * Thread-safe: one immutable `HttpClient` per JVM and connect timeout,
+  * shared by every task, so its connections are reused across tasks and
+  * micro-batches and the case class serializes without it.
   */
 final case class HttpEmbeddingProvider(
     endpoint: String,
@@ -36,18 +42,17 @@ final case class HttpEmbeddingProvider(
 
   override val dim: Int = EmbeddingModels.dimOf(modelAlias)
 
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofMillis(connectTimeoutMs))
-    .build()
+  private def client: HttpClient = HttpEmbeddingProvider.client(connectTimeoutMs)
 
-  override def embed(text: String): EmbeddingResult = {
-    val req = HttpRequest.newBuilder(URI.create(endpoint))
+  private def request(text: String): HttpRequest =
+    HttpRequest.newBuilder(URI.create(endpoint))
       .timeout(java.time.Duration.ofMillis(requestTimeoutMs))
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(
         s"""{"inputText": ${JsonCodec.quote(text)}}""", StandardCharsets.UTF_8))
       .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8))
+
+  private def result(resp: HttpResponse[String]): EmbeddingResult = {
     if (resp.statusCode() / 100 != 2)
       throw new java.io.IOException(
         s"embedding endpoint HTTP ${resp.statusCode()}: ${resp.body().take(200)}")
@@ -57,6 +62,35 @@ final case class HttpEmbeddingProvider(
         s"embedding endpoint returned ${vec.length} dims, expected $dim")
     EmbeddingResult(vec, tokens)
   }
+
+  override def embed(text: String): EmbeddingResult =
+    result(client.send(request(text), HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8)))
+
+  override def embedAsync(text: String): CompletableFuture[EmbeddingResult] = {
+    val sent = client.sendAsync(request(text), HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8))
+    val parsed = sent.thenApply[EmbeddingResult](r => result(r))
+    // a dependent stage does not pass a cancel on to its source: do it here
+    parsed.whenComplete((_: EmbeddingResult, _: Throwable) => sent.cancel(true))
+    parsed
+  }
+}
+
+object HttpEmbeddingProvider {
+  /** Runs the clients' completion stages. A small fixed pool of its own: a
+    * thread of [[EmbeddingStage.pool]] may block in [[HttpEmbeddingProvider.embed]],
+    * and the exchange it waits for must never queue behind it. Fixed, so
+    * a thousand calls in flight never grow a cached pool to hundreds of
+    * threads. */
+  private lazy val executor = Executors.newFixedThreadPool(
+    math.min(Runtime.getRuntime.availableProcessors(), 8), EmbeddingStage.daemons("graft-embed-http"))
+
+  private val clients = new ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+  private def client(connectTimeoutMs: Long): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs, (_: java.lang.Long) => HttpClient.newBuilder()
+      .connectTimeout(java.time.Duration.ofMillis(connectTimeoutMs))
+      .executor(executor)
+      .build())
 }
 
 /** Minimal JSON encode/decode for the embedding wire shape — enough for the

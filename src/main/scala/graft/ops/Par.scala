@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.concurrent.{blocking, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 
@@ -57,6 +57,28 @@ object Par {
     * the shared global pool spawn a replacement thread instead of
     * starving sibling futures when several concurrent-job ops run at
     * once (r20 ADVICE); one definition here so the execution-context
-    * policy has a single seam. */
-  def blockingFuture[T](body: => T): Future[T] = Future(blocking(body))
+    * policy has a single seam.
+    *
+    * The body's jobs carry the CALLER's job group, description,
+    * interrupt-on-cancel flag and scheduler pool, captured at submit time.
+    * A pooled thread's own Spark local properties were copied from
+    * whichever thread created it, so without this a later caller's jobs
+    * would run under an earlier caller's group, out of reach of its
+    * `cancelJobGroup`. The SQL execution id is not copied: the body's
+    * actions start their own executions. */
+  def blockingFuture[T](body: => T): Future[T] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext) match {
+      case None => Future(blocking(body))
+      case Some(sc) =>
+        val caller = callerProperties.map(k => k -> sc.getLocalProperty(k))
+        Future(blocking {
+          val own = callerProperties.map(k => k -> sc.getLocalProperty(k))
+          caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          try body finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        })
+    }
+
+  private val callerProperties = Seq(
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+    "spark.scheduler.pool")
 }

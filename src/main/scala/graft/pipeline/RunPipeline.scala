@@ -38,9 +38,14 @@ import graft.embed.{EmbeddingModels, RetryPolicy, StubEmbeddingProvider}
   *  - `embed.endpoint`  HTTP embedding endpoint URL → uses
   *                      [[graft.embed.HttpEmbeddingProvider]]; absent → the
   *                      deterministic stub (no-egress default)
-  *  - `embed.maxInFlight`  bounded concurrency per partition, every mode
-  *                      (default 1000, the reference's `unorderedWait`
-  *                      capacity)
+  *  - `embed.maxInFlight`  embed calls in flight at once per executor JVM
+  *                      and provider, every mode (default 1000, the
+  *                      reference's `unorderedWait` capacity). The bound is
+  *                      shared by all the partitions a JVM runs at once: the
+  *                      reference's capacity is per operator instance, and
+  *                      one executor JVM is the closer analogue of that
+  *                      than one partition, whose count a deployment
+  *                      neither sees nor fixes
   *  - `embed.maxAttempts`  attempts per record before it fails (default 3)
   *  - `deadletter.dir`  where records that fail embedding land, every mode:
   *                      `run=<source hash>` (batch) or `batch=<id>`
@@ -51,6 +56,9 @@ import graft.embed.{EmbeddingModels, RetryPolicy, StubEmbeddingProvider}
   *                      sets the overlap stride
   *  - `timeout.s`       streaming: stop gracefully after N seconds (0 = run
   *                      until external termination)
+  *
+  * Any other key is rejected by [[PipelineConfig.validated]], so a typo
+  * fails the run instead of falling back to a default.
   */
 final case class PipelineConfig(settings: Map[String, String]) {
   def get(key: String): Option[String] = settings.get(key)
@@ -75,10 +83,13 @@ final case class PipelineConfig(settings: Map[String, String]) {
   def retryPolicy: RetryPolicy =
     RetryPolicy(maxAttempts = int("embed.maxAttempts").getOrElse(3))
   def kafkaExtra: Map[String, String] =
-    settings.collect { case (k, v) if k.startsWith("kafka.option.") =>
-      k.stripPrefix("kafka.option.") -> v }
+    settings.collect { case (k, v) if k.startsWith(PipelineConfig.kafkaOption) =>
+      k.stripPrefix(PipelineConfig.kafkaOption) -> v }
 
   def validated: PipelineConfig = {
+    settings.keys.filterNot(PipelineConfig.known).foreach { k =>
+      throw new IllegalArgumentException(s"unknown config key: $k")
+    }
     require(Set("batch", "streaming", "streaming-kafka")(mode), s"unknown mode: $mode")
     require(Set("parquet", "memory", "http")(sinkKind), s"unknown sink.kind: $sinkKind")
     EmbeddingModels.dimOf(modelAlias) // throws on unknown model
@@ -94,6 +105,16 @@ final case class PipelineConfig(settings: Map[String, String]) {
 }
 
 object PipelineConfig {
+  /** Every key the runner reads: these, and any key under `kafkaOption`. */
+  val kafkaOption = "kafka.option."
+  val keys: Set[String] = Set(
+    "mode", "source.path", "kafka.bootstrap", "kafka.topic", "kafka.startingOffsets",
+    "sink.kind", "sink.dir", "sink.endpoint", "sink.index", "sink.bulkMaxDocs", "sink.flushMs",
+    "sink.maxAttempts", "sink.authHeader", "sink.deadletter.dir", "checkpoint.dir", "model",
+    "embed.endpoint", "embed.maxInFlight", "embed.maxAttempts", "deadletter.dir",
+    "chunk.size", "chunk.stride", "timeout.s")
+  def known(key: String): Boolean = keys(key) || key.startsWith(kafkaOption)
+
   /** `k=v` args in order (later wins); `@file` loads a properties file. */
   def parse(args: Seq[String]): PipelineConfig =
     PipelineConfig(args.foldLeft(Map.empty[String, String]) { (acc, arg) =>

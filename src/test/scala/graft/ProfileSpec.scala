@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class ProfileSpec extends AnyFunSuite {
@@ -12,5 +19,25 @@ class ProfileSpec extends AnyFunSuite {
     assert(a._1 > 0 && a._2 > 0 && a._3 > 0, a)
     assert(a === b)
     assert(ps.forall(_.warmSec.size == 1))
+  }
+
+  test("ops.Par.blockingFuture jobs carry their caller's job group, back to back") {
+    val sc = TestSpark.spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("bf-caller-")).foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      for (caller <- Seq("bf-caller-a", "bf-caller-b")) {
+        sc.setJobGroup(caller, caller)
+        try Await.result(ops.Par.blockingFuture(sc.parallelize(1 to 4, 2).count()), 60.seconds)
+        finally sc.clearJobGroup()
+      }
+      org.apache.spark.ProfileBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(groups.asScala.toSeq === Seq("bf-caller-a", "bf-caller-b"))
   }
 }

@@ -215,6 +215,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(graft.sink.VectorTable.readOrEmpty(spark, dir).count() === 4)
   }
 
+  test("config runner: an unknown key fails validation, naming the key") {
+    val base = Seq("mode=batch", "source.path=/in", "sink.dir=/out")
+    PipelineConfig.parse(base :+ "kafka.option.sasl.mechanism=PLAIN").validated
+    val e = intercept[IllegalArgumentException](
+      PipelineConfig.parse(base :+ "embed.maxInflight=4").validated)
+    assert(e.getMessage.contains("embed.maxInflight"))
+  }
+
   test("config runner: parse, validate, batch end-to-end with dead letters") {
     intercept[IllegalArgumentException](
       PipelineConfig.parse(Seq("mode=warp")).validated)

@@ -13,8 +13,6 @@ import org.apache.spark.sql.SparkSession
   * is the last warm run's, read from the listener events of that run's
   * own job group once the listener bus is drained. The single-thread and
   * all-cores calibration probes before and after stamp the host's speed.
-  * Jobs that a query starts from a pooled thread (`ops.Par.blockingFuture`)
-  * carry the group that thread inherited, not necessarily this run's.
   *
   * Usage: Test/runMain graft.tools.Profile <sfDir> <warmRuns> q_a q_b … */
 object Profile {
