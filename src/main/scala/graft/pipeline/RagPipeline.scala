@@ -169,14 +169,16 @@ object RagPipeline {
   }
 
   /** O4→O5 for one unit of work — a micro-batch, or a whole batch run —
-    * over [[preEmbed]] output. With a dead-letter dir, embed failures land
-    * in `<deadLetterDir>/<key>` (overwritten, so a replayed key replaces
-    * its dead letters) and successes go to `write`; the attempts are
-    * cached so the two writes read ONE embedding pass — uncached, every
-    * document would be embedded twice and a flaky record could land in
-    * both outputs or neither. Without
-    * one, nothing is cached and the first record that still fails after
-    * its retries fails the task ([[embed]]'s policy). */
+    * over [[preEmbed]] output, in one embedding pass and the sink's own
+    * single Spark job. With a dead-letter dir the successes stream into
+    * `write` while the same task writes its failures to
+    * `<deadLetterDir>/<key>` ([[DeadLetterOutput]]), so each record lands
+    * in exactly one of the two, also across task retries. Dead letters are
+    * written only for a unit with failures, and a replayed key replaces
+    * them, also with none. `write` must read its frame in one job, as
+    * every [[graft.sink.VectorSink]] does. Without a dead-letter dir the
+    * first record that still fails after its retries fails the task
+    * ([[embed]]'s policy). */
   private[pipeline] def embedAndSink(
       pre: DataFrame,
       provider: EmbeddingProvider,
@@ -188,11 +190,15 @@ object RagPipeline {
     deadLetterDir match {
       case None => write(toVectorDocs(embedOrFail(attempts)))
       case Some(dl) =>
-        val cached = attempts.cache()
-        try {
-          write(toVectorDocs(embedSuccesses(cached)))
-          embedDeadLetters(cached).write.mode("overwrite").parquet(s"$dl/$key")
-        } finally cached.unpersist()
+        val spark = pre.sparkSession
+        import spark.implicits._
+        val deadLetters = DeadLetterOutput(spark, s"$dl/$key")
+        try write(toVectorDocs(attempts.mapPartitions(deadLetters.divert)))
+        catch { case t: Throwable =>
+          try deadLetters.abort() catch { case e: Throwable => t.addSuppressed(e) }
+          throw t
+        }
+        deadLetters.commit()
     }
   }
 

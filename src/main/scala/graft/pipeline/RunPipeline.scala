@@ -48,9 +48,11 @@ import graft.embed.{EmbeddingModels, RetryPolicy, StubEmbeddingProvider}
   *                      neither sees nor fixes
   *  - `embed.maxAttempts`  attempts per record before it fails (default 3)
   *  - `deadletter.dir`  where records that fail embedding land, every mode:
-  *                      `run=<source hash>` (batch) or `batch=<id>`
-  *                      (streaming), overwritten on replay. Absent → a
-  *                      record that fails embedding fails the batch
+  *                      parquet under `run=<source hash>` (batch) or
+  *                      `batch=<id>` (streaming), written only for batches
+  *                      with failures, by the same tasks that feed the
+  *                      sink; a replay replaces them. Absent → a record
+  *                      that fails embedding fails the batch
   *  - `chunk.size`      opt-in O3.5 passage chunking, every mode: window
   *                      size in tokens; `chunk.stride` (default = size)
   *                      sets the overlap stride

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.embed.JsonCodec
 
@@ -103,10 +105,12 @@ final case class HttpVectorSink(
     val cols = docs.columns.filterNot(_ == "_id").map(col)
     val payload = docs.select(id.as("_docid"),
       to_json(struct(cols.toIndexedSeq: _*)).as("_doc"))
+    // only a dead-letter dir uses it
+    val hadoopConf = cfg.deadLetterDir.map(_ => HadoopConf.of(docs.sparkSession))
     payload.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
       val pid = Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0)
       BulkWriter.writePartition(
-        it.map(r => (r.getString(0), r.getString(1))), cfg, pid)
+        it.map(r => (r.getString(0), r.getString(1))), cfg, pid, hadoopConf)
       ()
     }
   }
@@ -119,12 +123,14 @@ private[sink] object BulkWriter {
   /** Buffers (id, docJson) pairs into `_bulk` NDJSON requests, flushing on
     * doc count, byte size, or buffer age; retries each bulk; dead-letters
     * a bulk that exhausts its attempts, or throws when there is no
-    * dead-letter dir. Returns (bulksSent, docsDeadLettered). */
+    * dead-letter dir. `hadoopConf` is the session's, which the dead-letter
+    * dir's filesystem resolves from; required with a dir. Returns
+    * (bulksSent, docsDeadLettered). */
   def writePartition(rows: Iterator[(String, String)], cfg: HttpVectorSink,
-                     partitionId: Int): (Int, Int) = {
-    val client = HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofMillis(cfg.connectTimeoutMs))
-      .build()
+                     partitionId: Int, hadoopConf: Option[Broadcast[SerializableConfiguration]]): (Int, Int) = {
+    require(cfg.deadLetterDir.isEmpty || hadoopConf.isDefined,
+      "a deadLetterDir needs the session's Hadoop conf")
+    val client = this.client(cfg.connectTimeoutMs)
     val buf = new StringBuilder
     val bufDocs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var bufSince = 0L
@@ -153,9 +159,18 @@ private[sink] object BulkWriter {
         flush()
     }
     flush()
-    if (deadLetters.nonEmpty) writeDeadLetters(cfg, partitionId, deadLetters.toSeq)
+    if (deadLetters.nonEmpty) writeDeadLetters(cfg, partitionId, deadLetters.toSeq, hadoopConf)
     (sent, dead)
   }
+
+  /** One client per JVM and connect timeout, shared by every task: its
+    * selector thread and keep-alive connections outlive a partition. */
+  private val clients = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, HttpClient]()
+
+  private def client(connectTimeoutMs: Long): HttpClient =
+    clients.computeIfAbsent(connectTimeoutMs, (_: java.lang.Long) => HttpClient.newBuilder()
+      .connectTimeout(java.time.Duration.ofMillis(connectTimeoutMs))
+      .build())
 
   /** True on success; false once attempts are exhausted. Retryable: IO
     * faults, non-2xx, and 2xx with `"errors": true` (partial item
@@ -208,10 +223,11 @@ private[sink] object BulkWriter {
     * API for object-store parity (same reasoning as
     * [[VectorTable.bootstrap]]). */
   private def writeDeadLetters(cfg: HttpVectorSink, partitionId: Int,
-                               docs: Seq[(String, String)]): Unit =
-    cfg.deadLetterDir.foreach { dir =>
+                               docs: Seq[(String, String)],
+                               hadoopConf: Option[Broadcast[SerializableConfiguration]]): Unit =
+    for (dir <- cfg.deadLetterDir; conf <- hadoopConf) {
       val path = new org.apache.hadoop.fs.Path(dir, f"deadletter-p$partitionId%05d.jsonl")
-      val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = path.getFileSystem(conf.value.value)
       fs.mkdirs(path.getParent)
       val out = fs.create(path, /* overwrite = */ true)
       try docs.foreach { case (id, doc) =>

@@ -130,10 +130,26 @@ class HttpVectorSinkSpec extends AnyFunSuite {
         if (i > 1) Thread.sleep(30)
         (s"id-$i", s"""{"text":"t$i"}""")
       }
-      val (sent, dead) = BulkWriter.writePartition(slow, cfg, partitionId = 0)
+      val (sent, dead) = BulkWriter.writePartition(slow, cfg, partitionId = 0, hadoopConf = None)
       assert(dead === 0)
       assert(sent >= 2, s"a 10 ms flush interval must split a 30 ms-gap trickle, sent=$sent")
       assert(srv.docs.size === 4)
+    } finally srv.stop()
+  }
+
+  test("one HTTP client per JVM: 50 partitions start no thread per partition") {
+    val srv = new TestBulkServer()
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    try {
+      val cfg = HttpVectorSink(srv.url, "idx")
+      def partition(i: Int) =
+        BulkWriter.writePartition(Iterator((s"id-$i", s"""{"text":"t$i"}""")), cfg, i, None)
+      (0 until 5).foreach(partition) // the client and its threads exist
+      val before = threads.getThreadCount
+      (5 until 55).foreach(partition)
+      val grown = threads.getThreadCount - before
+      assert(grown <= 4, s"$grown threads more after 50 partitions")
+      assert(srv.docs.size === 55)
     } finally srv.stop()
   }
 
